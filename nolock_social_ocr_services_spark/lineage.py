@@ -12,7 +12,8 @@ strategy #3), so this module implements the protocol explicitly:
   idempotent overwrite, THEN a lineage row (doc/span counts + trie-hit
   histogram, FIXTURES.md §5) and a manifest marker are committed —
   write-data-then-manifest ordering makes a kill at any point safe:
-  an uncommitted unit is simply re-overwritten on resume;
+  an uncommitted unit is simply re-overwritten on resume. A unit with
+  no rows writes no directory but still commits both;
 * resume = anti-join the unit list against the committed manifest and
   process only the remainder (``OcrRequestHandler``'s per-request
   idempotence, lifted to partition granularity);
@@ -28,11 +29,17 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_spans
+
+_DOCS_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
 
 
 def with_part_id(docs: DataFrame, num_parts: int) -> DataFrame:
@@ -56,42 +63,15 @@ def pending_docs(docs_with_part: DataFrame, manifest_df: DataFrame) -> DataFrame
     return docs_with_part.join(F.broadcast(done), on="part_id", how="left_anti")
 
 
-def _lineage_row(flat_out: DataFrame, run_id: str, part_id: int) -> DataFrame:
-    """(run_id, part_id, doc_count, span_count, trie_hits, committed_at)
-    computed from the committed partition output in one aggregation."""
-    spark = flat_out.sparkSession
-    hits = (
-        flat_out.filter(F.col("mime").isNotNull())
-        .groupBy("mime")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("mime"), F.col("n")))
-            ).alias("trie_hits")
-        )
-    )
-    counts = flat_out.agg(
-        F.countDistinct("doc_id").alias("doc_count"),
-        F.count("*").alias("span_count"),
-    )
-    return (
-        counts.crossJoin(hits)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("part_id", F.lit(part_id))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(
-            "run_id", "part_id", "doc_count", "span_count", "trie_hits",
-            "committed_at",
-        )
-    )
-
-
 def _lineage_rows_batch(
-    flat_out: DataFrame, run_id: str
+    flat_out: DataFrame, run_id: str, parts: list[int]
 ) -> DataFrame:
-    """Batch form of the lineage row: one (run_id, part_id, doc_count,
-    span_count, trie_hits, committed_at) row per part_id in one
-    aggregation over the re-read committed output."""
+    """One (run_id, part_id, doc_count, span_count, trie_hits,
+    committed_at) row per unit in ``parts``, in one aggregation over the
+    re-read committed output. A unit that extracted no rows still gets
+    its row: zero counts and an empty histogram."""
+    spark = flat_out.sparkSession
+    units = spark.createDataFrame([(p,) for p in parts], "part_id int")
     hits = (
         flat_out.filter(F.col("mime").isNotNull())
         .groupBy("part_id", "mime")
@@ -107,13 +87,17 @@ def _lineage_rows_batch(
         F.countDistinct("doc_id").alias("doc_count"),
         F.count("*").alias("span_count"),
     )
+    no_hits = F.create_map().cast("map<string,bigint>")
     return (
-        counts.join(hits, on="part_id", how="left")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
+        units.join(counts, on="part_id", how="left")
+        .join(hits, on="part_id", how="left")
         .select(
-            "run_id", "part_id", "doc_count", "span_count", "trie_hits",
-            "committed_at",
+            F.lit(run_id).alias("run_id"),
+            "part_id",
+            F.coalesce("doc_count", F.lit(0)).alias("doc_count"),
+            F.coalesce("span_count", F.lit(0)).alias("span_count"),
+            F.coalesce("trie_hits", no_hits).alias("trie_hits"),
+            F.current_timestamp().alias("committed_at"),
         )
     )
 
@@ -124,7 +108,6 @@ def run_extract_job(
     out_dir: str,
     run_id: str,
     num_parts: int = 16,
-    salt_buckets: int | None = None,
     fail_after: int | None = None,
     batch_size: int = 1,
 ) -> list[int]:
@@ -154,38 +137,20 @@ def run_extract_job(
         if fail_after is not None and len(processed) >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} commits")
         batch = pending[i : i + max(batch_size, 1)]
-        if len(batch) == 1:
-            part = batch[0]
-            part_docs = docsp.filter(F.col("part_id") == part).drop("part_id")
-            data_path = f"{out_dir}/data/part_id={part}"
-            extract_spans(part_docs, salt_buckets=salt_buckets).write.mode(
-                "overwrite"
-            ).parquet(data_path)
-            # data committed -> now lineage + manifest (ordering = crash safety)
-            flat_out = spark.read.parquet(data_path)
-            _lineage_row(flat_out, run_id, part).write.mode("append").parquet(
-                f"{out_dir}/_lineage"
-            )
-            _write_manifest(spark, out_dir, run_id, [part])
-            processed.append(part)
-            continue
         batch_docs = docsp.filter(F.col("part_id").isin(batch)).drop("part_id")
-        flat = extract_spans(batch_docs, salt_buckets=salt_buckets)
         # part_id is a pure function of doc_id -> re-derive after
         # extraction and write all units of the batch in ONE job.
-        flat_p = with_part_id(flat, num_parts)
+        flat_p = with_part_id(extract_spans(batch_docs), num_parts)
         (
             flat_p.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")
             .parquet(f"{out_dir}/data")
         )
-        re_read = spark.read.parquet(f"{out_dir}/data").filter(
-            F.col("part_id").isin(batch)
-        )
-        _lineage_rows_batch(re_read, run_id).write.mode("append").parquet(
-            f"{out_dir}/_lineage"
-        )
+        # data committed -> now lineage + manifest (ordering = crash safety)
+        _lineage_rows_batch(
+            _read_units(spark, out_dir, batch), run_id, batch
+        ).write.mode("append").parquet(f"{out_dir}/_lineage")
         _write_manifest(spark, out_dir, run_id, batch)
         processed.extend(batch)
     return processed
@@ -201,13 +166,25 @@ def _write_manifest(
     rows.write.mode("append").parquet(f"{out_dir}/_manifest")
 
 
+def _read_units(
+    spark: SparkSession, out_dir: str, parts: Iterable[int]
+) -> DataFrame:
+    """Output rows of ``parts``, with ``part_id``. A unit that extracted
+    no rows wrote no directory and contributes nothing."""
+    paths = [f"{out_dir}/data/part_id={p}" for p in sorted(parts)]
+    paths = [p for p in paths if os.path.isdir(p)]
+    if paths:
+        return spark.read.option("basePath", f"{out_dir}/data").parquet(*paths)
+    # no unit has rows on disk, so no file carries the schema
+    empty = spark.createDataFrame([], _DOCS_SCHEMA)
+    return with_part_id(extract_spans(empty), 1)
+
+
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Committed extraction output only (uncommitted dirs are invisible)."""
-    done = committed_parts(spark, out_dir)
-    df = spark.read.option("basePath", f"{out_dir}/data").parquet(
-        *[f"{out_dir}/data/part_id={p}" for p in sorted(done)]
+    return _read_units(spark, out_dir, committed_parts(spark, out_dir)).drop(
+        "part_id"
     )
-    return df.drop("part_id")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:

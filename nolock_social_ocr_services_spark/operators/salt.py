@@ -28,42 +28,18 @@ from pyspark.sql import functions as F
 
 
 def salted_repartition(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int | None = None,
-    key_cols: tuple[str, ...] = ("doc_id", "offset"),
-    salt_col: str = "salt",
-    keep_salt: bool = False,
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
-    """Repartition rows on a hash of ``key_cols`` (deterministic, even).
+    """Repartition rows on a hash of ``(doc_id, offset)`` (deterministic,
+    even).
 
     ``num_partitions``: target partition count (None -> session
     ``spark.sql.shuffle.partitions``).
 
-    ``salt_buckets``: optional cap on the spread of one document's rows.
-    When set, partitioning uses ``pmod(hash(*key_cols), salt_buckets)``
-    so one doc lands on at most ``salt_buckets`` partitions — only
-    useful when a downstream stage exploits per-doc locality; pick
-    ``salt_buckets >> num_partitions`` or accept empty partitions.
-    Default (None) spreads every row independently, which is the
-    balanced choice for pure per-row UDF stages.
-
     Deterministic re-runs produce identical partition assignment (no
     ``rand()``), which the checkpoint/resume protocol relies on.
     """
-    if salt_buckets is not None:
-        salted = df.withColumn(
-            salt_col,
-            F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(salt_buckets)),
-        )
-        part_cols = [salt_col]
-    else:
-        salted = df
-        part_cols = [F.col(c) for c in key_cols]
-    if num_partitions is not None:
-        out = salted.repartition(num_partitions, *part_cols)
-    else:
-        out = salted.repartition(*part_cols)
-    if salt_buckets is not None and not keep_salt:
-        out = out.drop(salt_col)
-    return out
+    keys = [F.col("doc_id"), F.col("offset")]
+    if num_partitions is None:
+        return df.repartition(*keys)
+    return df.repartition(num_partitions, *keys)

@@ -34,7 +34,6 @@ def run_extract_job_snap(
     run_id: str,
     num_parts: int = 16,
     batch_size: int = 4,
-    salt_buckets: int | None = None,
     fail_after: int | None = None,
 ) -> list[int]:
     """Run (or resume) extraction into a SnapTable at ``table_dir`` with
@@ -60,9 +59,7 @@ def run_extract_job_snap(
             raise RuntimeError(f"injected failure after {fail_after} commits")
         batch = pending[i : i + max(batch_size, 1)]
         batch_docs = docsp.filter(F.col("part_id").isin(batch)).drop("part_id")
-        flat = with_part_id(
-            extract_spans(batch_docs, salt_buckets=salt_buckets), num_parts
-        )
+        flat = with_part_id(extract_spans(batch_docs), num_parts)
         out.overwrite_partitions(
             flat,
             "part_id",
@@ -74,7 +71,7 @@ def run_extract_job_snap(
         # read() restores part_id from the path and casts it back to the
         # declared int type (recorded partition_by in the manifest)
         committed = out.read(spark, parts=batch)
-        lin.append(_lineage_rows_batch(committed, run_id))
+        lin.append(_lineage_rows_batch(committed, run_id, batch))
         processed.extend(batch)
     return processed
 

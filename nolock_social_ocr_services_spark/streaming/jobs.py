@@ -5,7 +5,7 @@ batch is our primary mode, but the same stages compose under
 ``readStream``:
 
 * ``stream_extract`` — file-source stream of corpus parquet ->
-  the SAME extract_spans stages (classify UDF, OCR UDF, typed parse are
+  the SAME extract_spans stages (classify, OCR UDF, typed parse are
   all stateless projections, legal in streaming) -> sink.
   ``maxFilesPerTrigger`` is the rate-limit knob (ST2's
   RateLimitWindow/Count, ReactiveMistralOcrPipeline.cs:151-163).
@@ -35,7 +35,6 @@ def stream_extract(
     corpus_path: str,
     schema=None,
     max_files_per_trigger: int = 4,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of extracted spans from a corpus directory."""
     if schema is None:
@@ -47,7 +46,7 @@ def stream_extract(
     )
     # salted_repartition uses repartition(), fine in streaming; the
     # per-doc reassembly (stateful agg) belongs to the sink side/batch.
-    return extract_spans(stream, salt_buckets=salt_buckets)
+    return extract_spans(stream)
 
 
 def windowed_stats(

@@ -103,9 +103,9 @@ def test_pending_docs_anti_join(spark, docs, tmp_path_factory):
 
 
 def test_batched_units_identical_to_per_unit(spark, docs, tmp_path_factory):
-    """batch_size > 1 (one scan + dynamic-partition-overwrite per batch)
-    must produce byte-identical output, lineage coverage, and manifests
-    as the per-unit path — only the scan count differs."""
+    """batch_size > 1 (one scan per batch instead of one per unit) must
+    produce byte-identical output, lineage coverage, and manifests as
+    batch_size=1 — only the scan count differs."""
     per_unit = str(tmp_path_factory.mktemp("per_unit"))
     batched = str(tmp_path_factory.mktemp("batched"))
     lineage.run_extract_job(
@@ -151,3 +151,27 @@ def test_batched_kill_resume(spark, docs, tmp_path_factory):
     assert _rows(lineage.read_output(spark, out)) == _rows(
         lineage.read_output(spark, clean)
     )
+
+
+@pytest.mark.parametrize("batch_size", [1, 4])
+def test_empty_units_commit_lineage_and_read(
+    spark, docs, tmp_path_factory, batch_size
+):
+    """Units that hold no documents still commit exactly one lineage row
+    (zero counts, empty trie-hit histogram), and read_output returns
+    every committed row without tripping over their missing data dirs."""
+    one_unit = docs.filter(F.pmod(F.hash("doc_id"), F.lit(4)) == 0)
+    out = str(tmp_path_factory.mktemp(f"empty_units_b{batch_size}"))
+    done = lineage.run_extract_job(
+        spark, one_unit, out, run_id="e", num_parts=4, batch_size=batch_size
+    )
+    assert done == [0, 1, 2, 3]
+    lin = {r.part_id: r for r in lineage.read_lineage(spark, out).collect()}
+    assert sorted(lin) == [0, 1, 2, 3]
+    n_spans = one_unit.agg(F.sum(F.size("spans"))).first()[0]
+    assert (lin[0].doc_count, lin[0].span_count) == (one_unit.count(), n_spans)
+    for p in (1, 2, 3):
+        assert (lin[p].doc_count, lin[p].span_count, lin[p].trie_hits) == (
+            0, 0, {}
+        )
+    assert lineage.read_output(spark, out).count() == n_spans

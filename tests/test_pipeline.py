@@ -23,12 +23,12 @@ def docs(spark, sf_dir):
 
 
 def test_identity_roundtrip_under_salting(spark, docs):
-    report = pipeline.identity_roundtrip_report(docs, salt_buckets=16)
+    report = pipeline.identity_roundtrip_report(docs)
     assert pipeline.equality_pass_rate(report) == 1.0
 
 
 def test_span_sequence_equality_vs_python_oracle(spark, docs, sf_dir):
-    got_rows = pipeline.extract_spans(docs, salt_buckets=16).collect()
+    got_rows = pipeline.extract_spans(docs).collect()
     got: dict[str, list] = {}
     for r in got_rows:
         got.setdefault(r.doc_id, []).append((r.kind, r.text, r.media_ref, r.offset))
@@ -46,14 +46,14 @@ def test_span_sequence_equality_vs_python_oracle(spark, docs, sf_dir):
 
 
 def test_extracted_documents_nested_order(spark, docs, sf_dir):
-    nested = pipeline.extracted_documents(docs, salt_buckets=8)
+    nested = pipeline.extracted_documents(docs)
     row = nested.filter(F.size("spans") >= 6).first()
     offsets = [s.offset for s in row.spans]
     assert offsets == sorted(offsets)
 
 
 def test_typed_receipt_fields(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     receipts = flat.filter(F.col("receipt").isNotNull())
     assert receipts.count() > 0
     r = receipts.select("receipt.*", "mime").first()
@@ -67,7 +67,7 @@ def test_typed_receipt_fields(spark, docs):
 
 
 def test_typed_check_fields(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     checks = flat.filter(F.col("check").isNotNull())
     assert checks.count() > 0
     c = checks.select("check.*").first()
@@ -78,7 +78,7 @@ def test_typed_check_fields(spark, docs):
 
 
 def test_empty_ocr_guard_for_unknown_payloads(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     unknown = flat.filter(F.col("mime") == "application/octet-stream")
     assert unknown.count() > 0
     assert unknown.filter(F.col("extract_error") != "empty_ocr_text").count() == 0
@@ -88,7 +88,7 @@ def test_empty_ocr_guard_for_unknown_payloads(spark, docs):
 
 
 def test_confidence_defaults(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     parsed = flat.filter(F.col("receipt").isNotNull() | F.col("check").isNotNull())
     assert parsed.filter(F.col("confidence") != 0.8).count() == 0
     text_spans = flat.filter(F.col("kind").isin("text", "html"))
@@ -194,26 +194,6 @@ def test_malformed_field_values_become_unparsed_records(spark):
     assert out["g1"].receipt is None and out["g1"].confidence == 0.5
     assert out["g2"].check is None and out["g2"].confidence == 0.5
     assert out["g4"].receipt is not None and out["g4"].confidence == 0.8
-
-
-def test_fused_classify_ocr_identical(spark, sf_dir):
-    """The fused single-UDF path must be byte-identical to the chained
-    classify->OCR path, including NULL-mime (non-media) and
-    octet-stream (undecodable media) semantics, and collapse the plan
-    to ONE ArrowEvalPython stage."""
-    from nolock_social_ocr_services_spark import corpus as _corpus
-
-    docs = _corpus.synthesize_documents(spark, sf_dir).cache()
-    cols = ["doc_id", "offset", "kind", "mime", "text", "media_ref",
-            "extract_error", "confidence", "ocr_model", "ocr_tokens"]
-    a = sorted(tuple(r) for r in
-               pipeline.extract_spans(docs, fused=False).select(cols).collect())
-    b = sorted(tuple(r) for r in
-               pipeline.extract_spans(docs, fused=True).select(cols).collect())
-    assert a == b
-    plan = (pipeline.extract_spans(docs, fused=True)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_adversarial_text_content_roundtrips(spark):

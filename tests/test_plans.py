@@ -1,6 +1,8 @@
 """Plan-shape regression tests: the efficiency properties SURVEY.md §4
 commits to must hold in the physical plan, not just in intent."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,11 +29,16 @@ def corpus_path(spark, sf_dir, tmp_path_factory):
 
 def test_extract_pipeline_one_scan_one_shuffle(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     assert scan_count(flat) == 1
     assert exchange_count(flat) == 1  # the salted repartition only
-    # default engine: classify is a codegen'd expression, so the OCR UDF
-    # is the ONLY Python stage in the whole pipeline
+    # ...and it spreads rows by the span key, not a bucketed salt column
+    assert re.search(
+        r"Exchange hashpartitioning\(doc_id#\d+, offset#\d+, \d+\)",
+        explain_str(flat),
+    )
+    # classify is a codegen'd expression, so the OCR UDF is the ONLY
+    # Python stage in the whole pipeline
     assert arrow_eval_count(flat) == 1
     assert batch_eval_count(flat) == 0  # no row-at-a-time Python anywhere
 
@@ -44,7 +51,7 @@ def test_filtered_extract_single_ocr_stage(spark, corpus_path):
     row. _ocr_udf.asNondeterministic() pins the filter above the single
     OCR projection."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     filtered = flat.filter(F.col("receipt").isNotNull()).select(
         "doc_id", "offset", "receipt"
     )
@@ -60,7 +67,7 @@ def test_barrier_filter_tests_null_bit_only(spark, corpus_path):
     referenced by the predicate, Catalyst prunes it and re-inlines the
     whole extraction expression into a pre-projection Filter."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     filtered = pipeline.barrier_filter(flat, F.col("receipt").isNotNull()).select(
         "doc_id", "offset", F.col("receipt.merchant_name").alias("m")
     )
@@ -83,21 +90,14 @@ def test_cleanup_chain_materialized_once(spark, corpus_path):
     regexp_replace nodes (clean chain + boilerplate strip), not the
     ~300 of the per-field inlined form."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     n = explain_str(flat).count("regexp_replace")
     assert n <= 12, f"cleanup chain re-inlined: {n} regexp_replace nodes"
 
 
-def test_extract_pipeline_udf_engine_two_arrow_stages(spark, corpus_path):
-    docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16, classify_engine="udf")
-    assert arrow_eval_count(flat) == 2  # classify UDF + ocr UDF
-    assert batch_eval_count(flat) == 0
-
-
 def test_extracted_documents_two_shuffles_total(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
-    nested = pipeline.extracted_documents(docs, salt_buckets=16)
+    nested = pipeline.extracted_documents(docs)
     assert scan_count(nested) == 1
     assert exchange_count(nested) == 2  # salt + reassembly hash-agg
 
@@ -125,7 +125,7 @@ def test_classifier_udf_input_is_prefix_projection(spark, corpus_path):
     # the ArrowEvalPython node's input must be the unbase64(substring(...))
     # projection, never the raw media_ref/spans payload column
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     plan = explain_str(flat)
     assert "unbase64" in plan and "substring" in plan
 

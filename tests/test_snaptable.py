@@ -212,6 +212,8 @@ def test_snap_job_empty_parts_still_commit(spark, sf_dir, tmp_path):
     assert again == []
     got = read_output_snap(spark, table_dir)
     assert got.count() > 0
+    # one lineage row per committed unit, the three empty ones included
+    assert read_lineage_snap(spark, table_dir).count() == 4
     docs.unpersist()
 
 

@@ -29,9 +29,11 @@ def test_stream_extract_matches_batch(spark, corpus_path, tmp_path_factory):
     got = spark.sql(
         "SELECT doc_id, offset, kind, mime, text, media_ref FROM stream_out"
     ).collect()
-    batch = pipeline.extract_spans(
-        spark.read.parquet(corpus_path), salt_buckets=16
-    ).select("doc_id", "offset", "kind", "mime", "text", "media_ref").collect()
+    batch = (
+        pipeline.extract_spans(spark.read.parquet(corpus_path))
+        .select("doc_id", "offset", "kind", "mime", "text", "media_ref")
+        .collect()
+    )
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
     assert len(got) > 0
 

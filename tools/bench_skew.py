@@ -45,8 +45,8 @@ from nolock_social_ocr_services_spark.session import get_spark  # noqa: E402
 
 
 def unsalted_documents(docs):
-    """extract_spans' expr-engine chain minus the salted exchange —
-    the control arm. Mirrors pipeline.extract_spans (else branch)."""
+    """pipeline.extract_spans' chain minus the salted exchange — the
+    control arm."""
     exploded = pipeline.explode_spans(docs)
     classified = classify_mime(
         exploded, data_url_col="media_ref", out_col="mime", engine="expr"
