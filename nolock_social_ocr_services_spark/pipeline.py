@@ -103,13 +103,9 @@ def extract_spans(docs: DataFrame) -> DataFrame:
     UDF: expr 2.07-2.28 s vs udf 2.27-2.78 s warm (~10-20%
     whole-pipeline).
     """
-    # explicit partition count: AQE would coalesce the salted exchange
-    # to ~64MB partitions, leaving cores idle and a straggler tail;
-    # 3 tasks/core keeps the wave granular.
-    cores = docs.sparkSession.sparkContext.defaultParallelism
-    salted = salted_repartition(
-        explode_spans(docs), num_partitions=max(cores * 3, 64)
-    )
+    # one salted task per core (salt.py): each Python task costs a fixed
+    # ~0.2 s to start, and per-row hashing already evens out partitions
+    salted = salted_repartition(explode_spans(docs))
     classified = classify_mime(
         salted, data_url_col="media_ref", out_col="mime", engine="expr"
     )

@@ -2,6 +2,8 @@
 committed partition, recomputes nothing already committed, and the final
 output is identical to an uninterrupted run (FIXTURES.md §5)."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -151,6 +153,23 @@ def test_batched_kill_resume(spark, docs, tmp_path_factory):
     assert _rows(lineage.read_output(spark, out)) == _rows(
         lineage.read_output(spark, clean)
     )
+
+
+def test_batch_writes_at_most_one_file_per_core_per_unit(
+    spark, docs, tmp_path_factory
+):
+    """Every salted task writes one file per unit it holds rows of, so
+    with one salted partition per core a unit gets at most
+    defaultParallelism parquet files from its batch."""
+    out = str(tmp_path_factory.mktemp("fanout"))
+    lineage.run_extract_job(
+        spark, docs, out, run_id="f", num_parts=4, batch_size=4
+    )
+    unit_dirs = sorted(glob.glob(f"{out}/data/part_id=*"))
+    assert len(unit_dirs) == 4
+    for d in unit_dirs:
+        n_files = len(glob.glob(f"{d}/*.parquet"))
+        assert 0 < n_files <= spark.sparkContext.defaultParallelism, d
 
 
 @pytest.mark.parametrize("batch_size", [1, 4])

@@ -52,6 +52,38 @@ def test_extracted_documents_nested_order(spark, docs, sf_dir):
     assert offsets == sorted(offsets)
 
 
+def test_giant_document_spreads_over_every_salted_partition(spark):
+    """Skew protection at one salted partition per core: the ~4,000
+    spans of ONE document reach every partition of the exchange, the
+    largest partition holds at most 1.25x the rows of the smallest, and
+    re-assembly still returns them in offset order."""
+    n = 4000
+    giant = spark.range(1).select(
+        F.lit("giant").alias("doc_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n - 1)),
+            lambda i: F.struct(
+                F.lit("text").alias("kind"),
+                F.concat(F.lit("t"), i.cast("string")).alias("text"),
+                F.lit(None).cast("string").alias("media_ref"),
+                i.alias("offset"),
+            ),
+        ).alias("spans"),
+    )
+    sizes = [
+        r["count"]
+        for r in pipeline.extract_spans(giant)
+        .groupBy(F.spark_partition_id())
+        .count()
+        .collect()
+    ]
+    assert len(sizes) == spark.sparkContext.defaultParallelism
+    assert sum(sizes) == n
+    assert max(sizes) <= 1.25 * min(sizes)
+    (row,) = pipeline.extracted_documents(giant).collect()
+    assert [s.offset for s in row.spans] == list(range(n))
+
+
 def test_typed_receipt_fields(spark, docs):
     flat = pipeline.extract_spans(docs)
     receipts = flat.filter(F.col("receipt").isNotNull())

@@ -32,11 +32,14 @@ def test_extract_pipeline_one_scan_one_shuffle(spark, corpus_path):
     flat = pipeline.extract_spans(docs)
     assert scan_count(flat) == 1
     assert exchange_count(flat) == 1  # the salted repartition only
-    # ...and it spreads rows by the span key, not a bucketed salt column
-    assert re.search(
-        r"Exchange hashpartitioning\(doc_id#\d+, offset#\d+, \d+\)",
+    # ...and it spreads rows by the span key, not a bucketed salt column,
+    # into one partition per core (one wave of Python tasks)
+    m = re.search(
+        r"Exchange hashpartitioning\(doc_id#\d+, offset#\d+, (\d+)\)",
         explain_str(flat),
     )
+    assert m
+    assert int(m.group(1)) == spark.sparkContext.defaultParallelism
     # classify is a codegen'd expression, so the OCR UDF is the ONLY
     # Python stage in the whole pipeline
     assert arrow_eval_count(flat) == 1

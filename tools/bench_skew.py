@@ -10,7 +10,9 @@ Builds two corpora from sf0.01 documents:
 
 and times extracted_documents (salted, the shipped plan) against the
 same chain WITHOUT the salted exchange (narrow explode -> UDFs), both
-local[16], noop sink, min-of-N warm. Prints one JSON line.
+local[$SPARK_GRAFT_CPUS] (default 16), noop sink, min-of-N warm. Both
+corpora are cached under $SKEW_WORK_DIR (default /dev/shm). Prints one
+JSON line.
 
 Run on a QUIET host (pause the scaling campaign first).
 """
@@ -115,8 +117,9 @@ def main() -> None:
     inflate = int(os.environ.get("SKEW_INFLATE", "150"))
     spark = get_spark(app_name="bench_skew", cpus=cpus)
 
-    bal_path = f"/dev/shm/skew_bal_{replicate}"
-    skw_path = f"/dev/shm/skew_skw_{replicate}_{giant_every}_{inflate}"
+    work = os.environ.get("SKEW_WORK_DIR", "/dev/shm")
+    bal_path = f"{work}/skew_bal_{replicate}"
+    skw_path = f"{work}/skew_skw_{replicate}_{giant_every}_{inflate}"
     if not os.path.exists(f"{bal_path}/_SUCCESS"):
         corpus.write_corpus(spark, sf_dir, bal_path, partitions=64,
                             replicate=replicate)
